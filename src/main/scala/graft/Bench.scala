@@ -4,9 +4,13 @@ import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+
+import graft.RegistryLoop.{jsonObject, jsonString, median}
 
 /**
  * Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR.
@@ -80,20 +84,44 @@ object Bench {
     }.toMap
   }
 
-  private def gcMillis(): Long =
-    ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(b => math.max(b.getCollectionTime, 0L)).sum
+  /** Bench times under [[GraftSession]]'s conf with nothing added. The AQE
+    * coalescing floor stays at Spark's own 1 MB default — measured both
+    * ways in round 14: 256k/64k floors fan CPU-dense small shuffles out to
+    * the cores (a21 3.25→2.46 warm), but suite-wide the extra tiny tasks
+    * cost more than they buy (full-registry A/B at sf0.1: 312.8 s @256k vs
+    * 260.6 s @1m, identical code — bench/BENCH_R14_MID{2,3}.json). */
+  private[graft] def sessionConf(cpus: Int): Map[String, String] = GraftSession.conf(cpus)
 
-  /** Drop every cached/localCheckpointed block the previous query left
-    * behind; each registered query is independent, so nothing is reused. */
-  private def clearPersisted(spark: SparkSession): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  /** Untimed warmup: a tiny end-to-end plan through the registered native
+    * expressions + md5 + a shuffle, so Janino, the codegen cache machinery
+    * and the noop writer JIT-compile before anything is timed. */
+  private def warmUp(spark: SparkSession): Unit = {
+    val warm = spark.range(256)
+      .select(col("id"), split(concat(col("id").cast("string"), lit(" warm up tokens")), " ").as("toks"))
+      .select(
+        md5(col("id").cast("string").cast("binary")).as("m"),
+        graft.llm.SimHash64.simhashCol(spark, "toks").as("sh"),
+        graft.llm.SimHashPortable60.simhashCol(spark, "toks").as("shp"),
+        graft.llm.TextOps.docFingerprint(col("id").cast("string")).as("fp"),
+        graft.llm.TextOps.portableDocFingerprint(col("id").cast("string")).as("pfp"))
+    warm.groupBy("m").agg(max("sh"), max("shp"), max("fp"), max("pfp"))
+      .write.format("noop").mode("overwrite").save()
+    // also exercise the ObjectHashAggregate collect_set → sort_array →
+    // array_join path: s18's cold-rep probe (round 11) showed the first
+    // volume pass through that generated class costs ~5× task time
+    // (238 s vs 44–57 s warm at sf1) purely in C2-JIT compilation
+    spark.range(4096)
+      .select((col("id") % 64).as("k"), col("id").cast("string").as("v"))
+      .groupBy("k")
+      .agg(array_join(sort_array(collect_set(col("v"))), "|").as("agg"),
+        countDistinct(col("v")).as("n"))
+      .write.format("noop").mode("overwrite").save()
+    RegistryLoop.clearPersisted(spark)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus  = GraftSession.cpus
     // a FILTERED dev run (SPARK_GRAFT_ONLY) must never clobber the tracked
     // full-registry artifact — it burned one round-8 commit before this
     // guard: the single-query JSON silently replaced the 160-query one
@@ -103,179 +131,86 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (sys.env.contains("SPARK_GRAFT_ONLY")) "bench/BENCH_DEV.json"
       else "bench/BENCH_DRIVER.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "8m"))
-      // AQE coalescing floor — measured BOTH ways in round 14 and kept at
-      // the Spark default: 256k/64k floors do fan CPU-dense small shuffles
-      // out to the cores (a21 3.25→2.46 warm), but suite-wide the extra
-      // tiny tasks cost more than they buy (full-registry A/B at sf0.1:
-      // 312.8 s @256k vs 260.6 s @1m, identical code —
-      // bench/BENCH_R14_MID{2,3}.json). Env knob kept for experiments.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "1m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(sessionConf(cpus))
+    warmUp(spark)
 
-    def jsonEscape(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-    // Untimed warmup: a tiny end-to-end plan through the registered native
-    // expressions + md5 + a shuffle, so Janino, the codegen cache machinery
-    // and the parquet/noop writer JIT-compile before anything is timed.
-    // SPARK_GRAFT_WARMUP=0 disables (to measure the true-cold profile).
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
-      import org.apache.spark.sql.functions._
-      val warm = spark.range(256)
-        .select(col("id"), split(concat(col("id").cast("string"), lit(" warm up tokens")), " ").as("toks"))
-        .select(
-          md5(col("id").cast("string").cast("binary")).as("m"),
-          graft.llm.SimHash64.simhashCol(spark, "toks").as("sh"),
-          graft.llm.SimHashPortable60.simhashCol(spark, "toks").as("shp"),
-          graft.llm.TextOps.docFingerprint(col("id").cast("string")).as("fp"),
-          graft.llm.TextOps.portableDocFingerprint(col("id").cast("string")).as("pfp"))
-      warm.groupBy("m").agg(max("sh"), max("shp"), max("fp"), max("pfp"))
-        .write.format("noop").mode("overwrite").save()
-      // also exercise the ObjectHashAggregate collect_set → sort_array →
-      // array_join path: s18's cold-rep probe (round 11) showed the first
-      // volume pass through that generated class costs ~5× task time
-      // (238 s vs 44–57 s warm at sf1) purely in C2-JIT compilation
-      spark.range(4096)
-        .select((col("id") % 64).as("k"), col("id").cast("string").as("v"))
-        .groupBy("k")
-        .agg(array_join(sort_array(collect_set(col("v"))), "|").as("agg"),
-          countDistinct(col("v")).as("n"))
-        .write.format("noop").mode("overwrite").save()
-      clearPersisted(spark)
-    }
-
-    // dev-only filter: SPARK_GRAFT_ONLY=<prefix> limits the run; the driver
-    // doesn't set it, so round benches always run the full registry
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(n.startsWith)))
-    // per query: all successful rep times (sec) and their gc deltas (ms).
+    val queries = RegistryLoop.registered()
+    val names = queries.map(_._1)
+    // per query: its successful (query, rep) runs — wall seconds, GC delta
+    // and per-rep shuffle/spill byte deltas (round 10: measured bytes, not
+    // plan shapes, back the 100 TB shuffle-volume audit in PERF.md).
     // INTERLEAVED passes (round 9): pass p of EVERY query, then pass p+1 —
     // a sustained host-contention window now lands on one pass of many
     // queries (median-correctable) instead of all reps of one query.
-    val repSec = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
-    val repGc  = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Long]]
-    // per-rep shuffle/spill byte deltas (round 10): measured bytes, not plan
-    // shapes, back the 100 TB shuffle-volume audit in PERF.md. One query
-    // runs at a time and the listener bus is drained before each snapshot,
-    // so a delta is attributable to exactly one (query, rep).
-    val repShuffle = scala.collection.mutable.LinkedHashMap.empty[String, Vector[graft.tools.ShuffleTelemetry.Snap]]
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    names.foreach { n =>
-      repSec += n -> Vector.empty; repGc += n -> Vector.empty
-      repShuffle += n -> Vector.empty
-    }
+    val runs = mutable.LinkedHashMap(names.map(_ -> Vector.empty[RegistryLoop.Run[Unit]]): _*)
+    val errors = mutable.LinkedHashMap.empty[String, String]
     val telemetry = new graft.tools.ShuffleTelemetry(spark.sparkContext)
-    var pass = 0
-    while (pass < reps) {
-      names.foreach { name =>
-        if (!errors.contains(name)) {  // a failed query stays failed; skip its later passes
-          val fn = SparkEntry.queries(name)
-          val sh0 = telemetry.snapshot()
-          val gc0 = gcMillis()
-          val t0 = System.nanoTime()
-          try {
-            // noop sink evaluates the full physical plan (count() would let
-            // Catalyst prune every projection and undercount the work).
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            repSec(name) :+= (System.nanoTime() - t0) / 1e9
-            repGc(name)  :+= (gcMillis() - gc0)
-            repShuffle(name) :+= (telemetry.snapshot() - sh0)
-          } catch {
-            case e: Throwable =>
-              errors += name -> s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}"
-          }
-          clearPersisted(spark)
-        }
+    for (_ <- 1 to reps) {
+      // a failed query stays failed; skip its later passes
+      val pending = queries.filterNot { case (n, _) => errors.contains(n) }
+      // noop sink evaluates the full physical plan (count() would let
+      // Catalyst prune every projection and undercount the work).
+      RegistryLoop.run(spark, sfDir, pending, telemetry = Some(telemetry)) { (_, df) =>
+        df.write.format("noop").mode("overwrite").save()
+      }.foreach { r =>
+        if (r.result.isSuccess) runs(r.name) :+= r
+        else errors += r.name -> RegistryLoop.errorText(r.result.failed.get)
       }
-      pass += 1
     }
     // a query with an error keeps any earlier successful reps as PARTIAL
     // data (full artifact only, flagged) — never in the headline, so a
     // flaky query can't shrink "value" into a phantom speedup unnoticed
-    val partialSec = repSec.collect { case (k, v) if errors.contains(k) && v.nonEmpty => k -> v }
-    val partialGc  = repGc.collect  { case (k, v) if errors.contains(k) && v.nonEmpty => k -> v }
-    errors.keys.foreach { k => repSec -= k; repGc -= k }
-    repSec.filterInPlace((_, v) => v.nonEmpty)
-    repGc.filterInPlace((_, v) => v.nonEmpty)
-
-    def median(xs: Vector[Double]): Double = {
-      val s = xs.sorted
-      val n = s.length
-      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-    }
-    val med = repSec.map { case (k, v) => k -> median(v) }
-    val total = if (med.nonEmpty) med.values.sum else 0.0
-    val es = errors.map { case (k, v) => "\"" + jsonEscape(k) + "\":\"" + jsonEscape(v) + "\"" }
-      .mkString("{", ",", "}")
+    val (partial, ok) = runs.filter(_._2.nonEmpty).partition { case (k, _) => errors.contains(k) }
+    val med = ok.map { case (k, v) => k -> median(v.map(_.sec)) }
+    val total = med.values.sum
+    val es = jsonObject(errors.map { case (k, v) => k -> jsonString(v) })
 
     // full-fidelity artifact: complete names, every rep, gc telemetry;
-    // partial (errored-later) queries carry their reps flagged, outside the headline
-    def qEntry(k: String, v: Vector[Double], gc: Vector[Long], partial: Boolean): String = {
-      // shuffle bytes are plan-determined (stable across reps modulo AQE),
-      // so the artifact carries the per-rep MAX of each counter — one number
-      // per query per counter, honest about the worst rep
-      val sh = repShuffle.getOrElse(k, Vector.empty)
-      val shJson = if (sh.isEmpty) "" else
-        ",\"shuffle_rw_bytes\":[" + sh.map(_.readBytes).max + "," + sh.map(_.writeBytes).max + "]" +
-        ",\"spill_bytes\":[" + sh.map(_.memSpillBytes).max + "," + sh.map(_.diskSpillBytes).max + "]"
-      "\"" + jsonEscape(k) + "\":{\"sec\":" + f"${median(v)}%.6f" +
-        ",\"min\":" + f"${v.min}%.6f" + ",\"max\":" + f"${v.max}%.6f" +
-        ",\"reps\":" + v.map(x => f"$x%.6f").mkString("[", ",", "]") +
-        ",\"gc_ms\":" + gc.mkString("[", ",", "]") + shJson +
-        (if (partial) ",\"partial\":true" else "") + "}"
+    // shuffle bytes are plan-determined (stable across reps modulo AQE),
+    // so the artifact carries the per-rep MAX of each counter — one number
+    // per query per counter, honest about the worst rep
+    def qEntry(v: Vector[RegistryLoop.Run[Unit]], partial: Boolean): String = {
+      val secs = v.map(_.sec)
+      val sh = v.flatMap(_.shuffle)
+      jsonObject(Seq(
+        "sec" -> f"${median(secs)}%.6f", "min" -> f"${secs.min}%.6f", "max" -> f"${secs.max}%.6f",
+        "reps" -> secs.map(x => f"$x%.6f").mkString("[", ",", "]"),
+        "gc_ms" -> v.map(_.gcMs).mkString("[", ",", "]")) ++
+        (if (sh.isEmpty) Nil else Seq(
+          "shuffle_rw_bytes" -> s"[${sh.map(_.readBytes).max},${sh.map(_.writeBytes).max}]",
+          "spill_bytes" -> s"[${sh.map(_.memSpillBytes).max},${sh.map(_.diskSpillBytes).max}]")) ++
+        (if (partial) Seq("partial" -> "true") else Nil))
     }
-    val fullQs = (
-      repSec.map { case (k, v) => qEntry(k, v, repGc(k), partial = false) } ++
-      partialSec.map { case (k, v) => qEntry(k, v, partialGc(k), partial = true) }
-    ).mkString("{", ",", "}")
+    val fullQs = jsonObject(
+      ok.map { case (k, v) => k -> qEntry(v, partial = false) } ++
+      partial.map { case (k, v) => k -> qEntry(v, partial = true) })
     // run provenance: pins WHICH run produced an artifact even if the file
     // is copied — round-8's committed-vs-driver artifact confusion is
     // unambiguous with run_id + hostname + load in the record
-    val host = try java.net.InetAddress.getLocalHost.getHostName catch { case _: Throwable => "unknown" }
+    val host = try java.net.InetAddress.getLocalHost.getHostName catch { case NonFatal(_) => "unknown" }
     val startedAt = java.time.Instant.now().toString
     val runId = f"${host}-${ProcessHandle.current.pid}%d-${System.currentTimeMillis()}%d"
     val loadAvg = ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","reps":$reps,"interleaved":true,"sf":"${jsonEscape(sfDir)}","cpus":$cpus,""" +
-      s""""run_id":"${jsonEscape(runId)}","hostname":"${jsonEscape(host)}","written_at":"${jsonEscape(startedAt)}","load_avg_end":$loadAvg,""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","reps":$reps,"interleaved":true,"sf":${jsonString(sfDir)},"cpus":$cpus,""" +
+      s""""run_id":${jsonString(runId)},"hostname":${jsonString(host)},"written_at":${jsonString(startedAt)},"load_avg_end":$loadAvg,""" +
       s""""queries":$fullQs,"errors":$es,""" +
-      s""""jvm":"${jsonEscape(System.getProperty("java.version"))}","heap_max_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)}}"""
+      s""""jvm":${jsonString(System.getProperty("java.version"))},"heap_max_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)}}"""
     try {
       val p = Paths.get(outPath)
       Option(p.getParent).foreach(Files.createDirectories(_))
       Files.write(p, full.getBytes(StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"bench: could not write $outPath: ${e.getMessage}")
     }
 
     // compact stdout line (must fit the driver's ~2000-char tail window)
     val short = shortKeys(names)
-    val qs = med.map { case (k, v) => "\"" + jsonEscape(short(k)) + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
+    val qs = jsonObject(med.map { case (k, v) => short(k) -> f"$v%.3f" })
     println(
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","stat":"median","reps":$reps,"queries":$qs,"errors":$es,""" +
-      s""""sf":"${jsonEscape(sfDir)}","keys":"prefix-before-first-underscore","full":"${jsonEscape(outPath)}"}""")
+      s""""sf":${jsonString(sfDir)},"keys":"prefix-before-first-underscore","full":${jsonString(outPath)}}""")
     // Round 15, additions-only: at 329 queries the per-query line above is
     // ~8 KB, longer than the driver's ~2000-char tail capture, so its JSON
     // parse came back null every round (PERF_r14 "prev_bench_ok": false
@@ -285,7 +220,7 @@ object Bench {
     // per-query line, timing protocol and env contract are untouched.
     println(
       s"""{"metric":"total","value":${f"$total%.3f"},"total_sec":${f"$total%.3f"},"unit":"sec","stat":"median","reps":$reps,""" +
-      s""""n":${med.size},"errors":$es,"sf":"${jsonEscape(sfDir)}","cpus":$cpus,"full":"${jsonEscape(outPath)}"}""")
+      s""""n":${med.size},"errors":$es,"sf":${jsonString(sfDir)},"cpus":$cpus,"full":${jsonString(outPath)}}""")
     spark.stop()
   }
 }

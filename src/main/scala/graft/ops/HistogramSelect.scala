@@ -114,23 +114,18 @@ object HistogramSelect {
    * layout could fill the cores on its own (bytes ≥ parallelism ×
    * maxPartitionBytes — where [[ScanPar.widen]] starts to no-op), or the
    * frame has no file inputs at all (in-memory fixtures: cheap either
-   * way, and specs must exercise the parallel path). Env override
-   * `SPARK_GRAFT_PARCUM` = force | off for A/B evidence and plan dumps.
+   * way, and specs must exercise the parallel path).
    */
-  private def useParallelCum(hist: DataFrame): Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_PARCUM", "auto") match {
-      case "force" => true
-      case "off" => false
-      case _ =>
-        val spark = hist.sparkSession
-        val p = spark.sparkContext.defaultParallelism
-        if (p <= 1) return false
-        ScanPar.inputBytes(hist) match {
-          case None => true // in-memory fixture: cheap either way; specs cover the parallel path
-          case Some(bytes) =>
-            bytes >= p.toLong * spark.sessionState.conf.filesMaxPartitionBytes
-        }
+  private def useParallelCum(hist: DataFrame): Boolean = {
+    val spark = hist.sparkSession
+    val p = spark.sparkContext.defaultParallelism
+    if (p <= 1) return false
+    ScanPar.inputBytes(hist) match {
+      case None => true // in-memory fixture: cheap either way; specs cover the parallel path
+      case Some(bytes) =>
+        bytes >= p.toLong * spark.sessionState.conf.filesMaxPartitionBytes
     }
+  }
 
   private[graft] def parCumSum(hist: DataFrame, groupCol: String,
                                valCol: String, sumCols: Seq[String]): DataFrame = {

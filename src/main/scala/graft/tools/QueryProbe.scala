@@ -1,28 +1,36 @@
 package graft.tools
 
-import java.lang.management.ManagementFactory
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
 import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
+
+import graft.{GraftSession, RegistryLoop}
 
 /**
- * Per-query diagnostic: runs one or more registered queries for N reps on
- * one SF dir and prints, per rep, the wall time, GC delta, shuffle/spill
- * deltas AND a per-stage breakdown (run time, GC, shuffle bytes, spill,
- * task count) — the evidence layer Bench deliberately aggregates away.
+ * Per-query diagnostic, under [[graft.Bench]]'s session conf.
  *
- * Built for the round-10 verdict's open adjudications:
- *  - s18's sf1 rep variance (45.1 s median vs 31.6 s min on identical
- *    code): is the slow rep a particular STAGE (sort-fallback in the
- *    ObjectHashAggregate? scan skew?) or ambient (GC/host)?
- *  - c2's 10.7× sf0.1→sf1 hop: fan-out-linear (output rows grew 10×,
- *    time followed) or a shuffle-partition artifact?
+ * Probe mode runs one or more registered queries for N reps on one SF dir
+ * and prints, per rep, the wall time, GC delta, disk spill AND a
+ * per-stage breakdown (run time, GC, shuffle bytes, spill, task count) —
+ * the evidence layer Bench deliberately aggregates away (e.g. whether a
+ * slow rep is one STAGE — a sort fallback, scan skew — or ambient GC/host).
  *
- * Usage: runMain graft.tools.QueryProbe <names,csv> <sfDir> [reps] [--rows]
- *   --rows additionally counts output rows (one extra evaluation).
+ *   QueryProbe <names,csv> <sfDir> [reps=3] [--rows]
+ *     --rows additionally counts output rows (one extra evaluation).
+ *
+ * Explain mode dumps the formatted physical plan of each selected query
+ * to `target/explains/<name>.txt` plus a one-line summary to stdout:
+ * exchange / broadcast / sort-merge / codegen-span counts and pushed
+ * filters.
+ *
+ *   QueryProbe --explain <sfDir> [prefixes,csv]
+ *
+ * Exits 1 if any query failed.
  */
 object QueryProbe {
 
@@ -43,69 +51,68 @@ object QueryProbe {
     }
   }
 
-  private def gcMillis(): Long =
-    ManagementFactory.getGarbageCollectorMXBeans.asScala2.map(b => math.max(b.getCollectionTime, 0L)).sum
-
-  // scala.jdk.CollectionConverters without the import noise
-  private implicit class JListOps[A](l: java.util.List[A]) {
-    def asScala2: Iterator[A] = { val it = l.iterator(); Iterator.continually(it).takeWhile(_.hasNext).map(_.next()) }
-  }
+  /** Both modes, like Bench, run under [[GraftSession]]'s conf as is. */
+  private[graft] def sessionConf(cpus: Int): Map[String, String] = GraftSession.conf(cpus)
 
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val spark = GraftSession.start(sessionConf(GraftSession.cpus))
+    val runs = if (args.headOption.contains("--explain")) {
+      val sfDir = args(1)
+      val outDir = Paths.get("target/explains")
+      Files.createDirectories(outDir)
+      RegistryLoop.run(spark, sfDir, RegistryLoop.registered(RegistryLoop.onlyPrefixes(args.lift(2)))) {
+        (name, df) =>
+          val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+          Files.write(outDir.resolve(s"$name.txt"), plan.getBytes(StandardCharsets.UTF_8))
+          val exchanges = "Exchange".r.findAllIn(plan).size
+          val bcasts = "BroadcastHashJoin".r.findAllIn(plan).size
+          val smj = "SortMergeJoin".r.findAllIn(plan).size
+          // codegen spans only surface in SIMPLE mode as `*(n)` operator
+          // prefixes (formatted mode never prints the WholeStageCodegen
+          // label pre-execution) — count DISTINCT span ids
+          val simple = df.queryExecution.explainString(ExplainMode.fromString("simple"))
+          val codegen = "\\*\\((\\d+)\\)".r.findAllMatchIn(simple).map(_.group(1)).toSet.size
+          val pushed = "PushedFilters: \\[[^\\]]+\\]".r.findAllIn(plan).count(!_.contains("[]"))
+          println(f"$name%-28s exch=$exchanges bhj=$bcasts smj=$smj wsc=$codegen pushedFilters=$pushed")
+      }
+    } else probe(spark, args)
+    spark.stop()
+    if (runs.exists(_.result.isFailure)) sys.exit(1)
+  }
+
+  private def probe(spark: org.apache.spark.sql.SparkSession,
+                    args: Array[String]): Seq[RegistryLoop.Run[Unit]] = {
     val sfDir = args(1)
     val reps = args.lift(2).filterNot(_.startsWith("--")).map(_.toInt).getOrElse(3)
     val wantRows = args.contains("--rows")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT_BYTES", "8m"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "1m")) // match Bench
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val queries = RegistryLoop.named(args(0))
     val tap = new StageTap
     spark.sparkContext.addSparkListener(tap)
 
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query $name"))
-      println(s"\n=== $name @ $sfDir (reps=$reps) ===")
-      if (wantRows) {
-        val n = fn(spark, sfDir).count()
-        println(f"output_rows=$n%d")
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
-      (1 to reps).foreach { rep =>
+    queries.flatMap { q =>
+      println(s"\n=== ${q._1} @ $sfDir (reps=$reps) ===")
+      if (wantRows) RegistryLoop.run(spark, sfDir, Seq(q))((_, df) => df.count())
+        .foreach(_.result.foreach(n => println(f"output_rows=$n%d")))
+      (1 to reps).flatMap { rep =>
         GraftListenerBridge.drainListenerBus(spark.sparkContext)
         tap.rows.clear()
-        val gc0 = gcMillis()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val gcD = gcMillis() - gc0
+        val runs = RegistryLoop.run(spark, sfDir, Seq(q)) { (_, df) =>
+          df.write.format("noop").mode("overwrite").save()
+        }
         GraftListenerBridge.drainListenerBus(spark.sparkContext)
         val st = tap.rows.toVector.sortBy(-_.runMs)
-        val totSpill = st.map(_.diskSpill).sum
-        println(f"rep$rep%d wall=$wall%.2fs driver_gc=${gcD}ms stages=${st.size}%d disk_spill=${totSpill}B")
+        runs.foreach { r =>
+          println(f"rep$rep%d wall=${r.sec}%.2fs driver_gc=${r.gcMs}ms stages=${st.size}%d " +
+            f"disk_spill=${st.map(_.diskSpill).sum}B" +
+            r.result.failed.map(e => s" FAILED ${RegistryLoop.errorText(e)}").getOrElse(""))
+        }
         st.take(8).foreach { r =>
           println(f"  stage${r.id}%-5d run=${r.runMs}%7dms gc=${r.gcMs}%6dms tasks=${r.tasks}%4d " +
             f"shR=${r.shRead / 1024 / 1024}%5dMB shW=${r.shWrite / 1024 / 1024}%5dMB " +
             f"spill=${r.memSpill / 1024 / 1024}%5dMB/${r.diskSpill / 1024 / 1024}%dMB  ${r.name}%s")
         }
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        runs
       }
     }
-    spark.stop()
   }
 }

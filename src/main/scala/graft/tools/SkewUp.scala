@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /**
  * Synthesizes a SKEWED replica of a driver testdata dir: same schema,
@@ -52,14 +54,7 @@ object SkewUp {
     val ordK = args.lift(4).map(_.toInt).getOrElse(1500)
     val docK = args.lift(5).map(_.toInt).getOrElse(2000)
 
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 

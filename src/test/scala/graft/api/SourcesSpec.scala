@@ -35,6 +35,17 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("retry makes exactly one attempt on an interrupt") {
+    var calls = 0
+    intercept[InterruptedException] {
+      Sources.retry(maxAttempts = 5, backoffMs = 1) {
+        calls += 1
+        throw new InterruptedException("cancelled")
+      }
+    }
+    assert(calls === 1)
+  }
+
   test("fetchCursor walks rel=next chain (quant_data_matrix_pdc.py:49-131)") {
     val data = ('a' to 'k').map(_.toString)
     val out = Sources.fetchCursor[String] { cursor =>
